@@ -14,61 +14,53 @@ state + output writes make replay after crash idempotent
 (exactly-once effective); resuming from the checkpoint picks up both
 the source offsets and the last committed state epoch.
 
-Two state engines:
+Per-batch work is proportional to the BATCH, not the accumulated
+state. Only vertices touched by the batch enter the quotient
+resolution; vertices whose component was merged away are relabelled
+lazily through a small component→root mapping that is applied at read
+time. Each epoch persists only (a) the rows for vertices first seen
+this batch (a delta) and (b) a full snapshot of the mapping (size =
+#components merged since the last compaction, not O(V)). Every
+``compact_every`` epochs a full snapshot is written (marker file
+``_BASE``) and the mapping resets — so a cold read unions one base +
+at most ``compact_every-1`` deltas.
 
-- ``mode="incremental"`` (default): per-batch work is proportional to
-  the BATCH, not the accumulated state. Only vertices touched by the
-  batch enter the quotient resolution; vertices whose component was
-  merged away are relabelled lazily through a small component→root
-  mapping that is applied at read time. Each epoch persists only
-  (a) the rows for vertices first seen this batch (a delta) and
-  (b) a full snapshot of the mapping (size = #components merged since
-  the last compaction, not O(V)). Every ``compact_every`` epochs a
-  full snapshot is written (marker file ``_BASE``) and the mapping
-  resets — so a cold read unions one base + at most
-  ``compact_every-1`` deltas.
-
-  BASE snapshots are laid out in ``bucket = pmod(xxhash64(vertex),
-  B)`` partitions (VERDICT r3 #4, LSM shape: the big compacted layer
-  is the one worth pruning; deltas stay plain parquet — they are
-  O(batch)-sized, read whole, and bucket-partitioning them was
-  measured at 15-22 s/epoch of tiny-file writes for no read benefit).
-  B is re-chosen at every base snapshot as ~state_rows /
-  ``bucket_rows_target`` (so bucket SIZE stays constant as state
-  grows). The per-batch touched-vertex probe prunes the base scan to
-  the batch's bucket set before the semi-join, so its read is
-  ~touched_buckets x bucket_rows_target base rows + the (small)
-  deltas — flat in accumulated state size whenever the batch's vertex
-  count is small against B (the 10^12-turn regime: per-batch arrivals
-  touch a tiny fraction of all-time state). Honest bounds: with batch
-  vertex counts >= B the bucket set covers everything and the probe
-  degrades gracefully to the r3 full scan (still no O(V) shuffle —
-  the semi-join build side is the batch vertex set, AQE-broadcast
-  when small, and no O(V) rewrite ever happens); a real 10^12
-  deployment that needs strict point lookups would lift the synopsis
-  into a KV store, which this layout is the parquet-native
-  approximation of. Crash-consistent: B is stamped ``_BUCKETS_<B>``
-  on the base's mapping dir (committed BEFORE the rows), and the
-  corner where a compaction's rows committed but its ``_BASE`` marker
-  didn't simply reads that snapshot as one more delta under
-  latest-epoch-wins dedup — correctness never depends on the marker.
-- ``mode="full"``: the r2 engine — previous global state re-enters
-  the merge as partials and the whole synopsis is rewritten per
-  epoch. Kept for comparison/profiling; both engines produce
-  bit-identical ``read_state`` output (canonical min-vertex labels).
+BASE snapshots are laid out in ``bucket = pmod(xxhash64(vertex), B)``
+partitions (VERDICT r3 #4, LSM shape: the big compacted layer is the
+one worth pruning; deltas stay plain parquet — they are O(batch)-sized,
+read whole, and bucket-partitioning them was measured at 15-22 s/epoch
+of tiny-file writes for no read benefit). B is re-chosen at every base
+snapshot as ~state_rows / ``bucket_rows_target`` (so bucket SIZE stays
+constant as state grows). The per-batch touched-vertex probe prunes
+the base scan to the batch's bucket set before the semi-join, so its
+read is ~touched_buckets x bucket_rows_target base rows + the (small)
+deltas — flat in accumulated state size whenever the batch's vertex
+count is small against B (the 10^12-turn regime: per-batch arrivals
+touch a tiny fraction of all-time state). Honest bounds: with batch
+vertex counts >= B the bucket set covers everything and the probe
+degrades gracefully to the r3 full scan (still no O(V) shuffle — the
+semi-join build side is the batch vertex set, AQE-broadcast when
+small, and no O(V) rewrite ever happens); a real 10^12 deployment that
+needs strict point lookups would lift the synopsis into a KV store,
+which this layout is the parquet-native approximation of.
+Crash-consistent: B is stamped ``_BUCKETS_<B>`` on the base's mapping
+dir (committed BEFORE the rows), and the corner where a compaction's
+rows committed but its ``_BASE`` marker didn't simply reads that
+snapshot as one more delta under latest-epoch-wins dedup — correctness
+never depends on the marker. Legacy r2 state dirs (every epoch a full
+snapshot, no markers, no mapping) still read and can be continued.
 
 State size is O(V), not O(E) — the whole point of the synopsis — so
-even the full engine's state stays small relative to turns
+even a compacted base stays small relative to turns
 (vertices = conversations x roles/tools << turns).
 
 Port note (Spark 4 stateful API): ``transformWithStateInPandas``
 exposes multiple typed state variables + timers per key on streaming
 frames, which would let this CC state live as managed per-key state
-INSIDE the streaming query instead of foreachBatch (see
-streaming/tws.py). The foreachBatch formulation is kept because
-(a) it is the shape the reference's incremental merger actually has,
-and (b) epoch-keyed parquet state gives replay-idempotent
-exactly-once with inspectable lineage.
+INSIDE the streaming query instead of foreachBatch. The foreachBatch
+formulation is kept because (a) it is the shape the reference's
+incremental merger actually has, and (b) epoch-keyed parquet state
+gives replay-idempotent exactly-once with inspectable lineage.
 """
 
 from __future__ import annotations
@@ -87,6 +79,12 @@ from gelly_streaming_spark.plans.connected_components import (
     resolve_partials,
 )
 
+# cap on the file count per bucketed base write (a real cluster with
+# a bigger file budget raises it)
+MAX_BUCKETS = 4096
+# shard-assignment salt for the per-batch fold
+SALT = 1
+
 
 class StreamingConnectedComponents:
     """Incremental CC over a streaming edge frame via foreachBatch.
@@ -95,8 +93,7 @@ class StreamingConnectedComponents:
       ``{state_path}/state/epoch=<id>`` vertex rows (full snapshots
       carry a ``_BASE`` marker; other epochs are new-vertex deltas)
       and ``{state_path}/mapping/epoch=<id>`` the lazy component→root
-      relabelling table (incremental mode only), written per epoch
-      for idempotent replay.
+      relabelling table, written per epoch for idempotent replay.
     - ``compact_every``: write a full base snapshot (and reset the
       mapping) every this many epochs. Bounds both the cold-read
       fan-in (#delta dirs) and the mapping size.
@@ -107,16 +104,11 @@ class StreamingConnectedComponents:
         state_path: str,
         vertex_type: str = "string",
         num_shards: int = 32,
-        salt: int = 1,
         shard_on=None,
-        mode: str = "incremental",
         compact_every: int = 16,
         bucket_rows_target: int = 262_144,
-        max_buckets: int = 4096,
         quotient_serial_limit: int = 1_000_000,
     ):
-        if mode not in ("incremental", "full"):
-            raise ValueError(f"unknown state engine mode: {mode!r}")
         # passed through to resolve_partials: quotients above this row
         # count take the fully-distributed pointer-doubling contraction
         # instead of the single-task union-find (VERDICT r3 #7 wants
@@ -126,12 +118,10 @@ class StreamingConnectedComponents:
         self.algo = ConnectedComponents(vertex_type=vertex_type)
         self.vertex_type = vertex_type
         self.num_shards = num_shards
-        self.salt = salt
         # shard_on: connectivity-local sharding key (conv-prefix for
         # transcript vertex labels) — keeps each conversation in one
         # shard so the quotient resolution has almost nothing to link
         self.shard_on = shard_on
-        self.mode = mode
         self.compact_every = max(1, int(compact_every))
         # bucketed state layout (VERDICT r3 #4): target rows per
         # bucket partition; B = state_rows / target, re-chosen at each
@@ -143,10 +133,7 @@ class StreamingConnectedComponents:
         # I/O-bound, below ~10^7 state rows — and base-write cost
         # grows with B on a non-parallel filesystem: 9 s at B=8 vs
         # 64 s at B=1024 for a 0.9M-row base on local disk).
-        # max_buckets caps the file count per base write (a real
-        # cluster with a bigger file budget raises it).
         self.bucket_rows_target = max(1, int(bucket_rows_target))
-        self.max_buckets = max(1, int(max_buckets))
         # in-memory carry between consecutive epochs of one run:
         # (base scan, delta rows (checkpointed/lazy), mapping, base
         # bucket count B or None for legacy bases, need_dedup).
@@ -200,10 +187,10 @@ class StreamingConnectedComponents:
 
     def _choose_buckets(self, n_rows: int) -> int:
         """Power-of-two bucket count ~ n_rows / bucket_rows_target,
-        clamped to [8, max_buckets]."""
+        clamped to [8, MAX_BUCKETS]."""
         want = max(1, n_rows // self.bucket_rows_target)
         b = 8
-        while b < want and b < self.max_buckets:
+        while b < want and b < MAX_BUCKETS:
             b <<= 1
         return b
 
@@ -227,11 +214,7 @@ class StreamingConnectedComponents:
         always has its marker. Explicit schema: an empty base writes
         no data file (dynamic partitioning), so there is no footer to
         infer from."""
-        b = (
-            read_marker_value(spark, self._map_dir(epoch), "_BUCKETS_")
-            if self.mode == "incremental"
-            else None
-        )
+        b = read_marker_value(spark, self._map_dir(epoch), "_BUCKETS_")
         t = self.vertex_type
         d = self._rows_dir(epoch)
         cols = f"vertex {t}, component {t}" + (
@@ -331,12 +314,8 @@ class StreamingConnectedComponents:
 
     # -- read API -------------------------------------------------------------
 
-    def read_state(
-        self, spark: SparkSession, upto_epoch: int | None = None
-    ) -> DataFrame | None:
+    def read_state(self, spark: SparkSession) -> DataFrame | None:
         epochs = self._committed(spark)
-        if upto_epoch is not None:
-            epochs = [e for e in epochs if e < upto_epoch]
         if not epochs:
             return None
         base, deltas, mapping, b, need_dedup = self._read_raw(spark, epochs)
@@ -371,21 +350,15 @@ class StreamingConnectedComponents:
         carry the ``bucket`` column; ``repartition("bucket")`` puts
         each bucket wholly in one task so the write emits <=B files,
         an O(rows) shuffle amortized over compact_every epochs."""
-        if self.mode == "incremental":
-            m = mapping if mapping is not None else self._empty_mapping(spark)
-            m.coalesce(1).write.mode("overwrite").parquet(
-                self._map_dir(epoch_id)
-            )
-            if bucket_b is not None:
-                write_marker(
-                    spark, self._map_dir(epoch_id), f"_BUCKETS_{bucket_b}"
-                )
-        if bucket_b is not None:
+        m = mapping if mapping is not None else self._empty_mapping(spark)
+        m.coalesce(1).write.mode("overwrite").parquet(self._map_dir(epoch_id))
+        if bucket_b is None:
+            rows.write.mode("overwrite").parquet(self._rows_dir(epoch_id))
+        else:
+            write_marker(spark, self._map_dir(epoch_id), f"_BUCKETS_{bucket_b}")
             rows.repartition("bucket").write.mode("overwrite").partitionBy(
                 "bucket"
             ).parquet(self._rows_dir(epoch_id))
-        else:
-            rows.write.mode("overwrite").parquet(self._rows_dir(epoch_id))
         if base:
             write_marker(spark, self._rows_dir(epoch_id), "_BASE")
 
@@ -419,12 +392,8 @@ class StreamingConnectedComponents:
             _t0 = now
 
         spark = edges.sparkSession
-        if self.mode == "full":
-            self._process_batch_full(spark, edges, epoch_id)
-            _mark("full_engine")
-            return
         batch = sharded_fold(
-            edges, self.algo, num_shards=self.num_shards, salt=self.salt,
+            edges, self.algo, num_shards=self.num_shards, salt=SALT,
             shard_on=self.shard_on,
         ).localCheckpoint(eager=True)
         _mark("fold")
@@ -565,22 +534,6 @@ class StreamingConnectedComponents:
         _mark("write")
         self._cache_epoch = epoch_id
 
-    def _process_batch_full(
-        self, spark: SparkSession, edges: DataFrame, epoch_id: int
-    ) -> None:
-        """r2 engine: previous global state rows re-enter the combine
-        as partials and the whole O(V) synopsis is re-resolved and
-        rewritten per epoch. Kept for comparison/profiling."""
-        batch_partials = sharded_fold(
-            edges, self.algo, num_shards=self.num_shards, salt=self.salt,
-            shard_on=self.shard_on,
-        )
-        prev = self.read_state(spark, upto_epoch=epoch_id)
-        if prev is not None:
-            batch_partials = batch_partials.unionByName(prev)
-        merged = resolve_partials(batch_partials, self.quotient_serial_limit)
-        self._write_epoch(spark, epoch_id, merged, mapping=None, base=True)
-
     def __call__(self, edges: DataFrame, epoch_id: int) -> None:
         self.process_batch(edges, epoch_id)
 
@@ -591,11 +544,7 @@ def run_streaming_cc(
     checkpoint_path: str,
     watermark: str = "1 minute",
     num_shards: int = 32,
-    salt: int = 1,
-    mode: str = "incremental",
     compact_every: int = 16,
-    bucket_rows_target: int = 262_144,
-    max_buckets: int = 4096,
 ):
     """Wire the transcript stream through the adapter into the
     incremental CC. Returns (StreamingQuery, StreamingConnectedComponents).
@@ -604,10 +553,9 @@ def run_streaming_cc(
 
     edges = edges_from_transcripts(transcript_stream, watermark=watermark).df
     cc = StreamingConnectedComponents(
-        state_path, vertex_type="string", num_shards=num_shards, salt=salt,
+        state_path, vertex_type="string", num_shards=num_shards,
         shard_on=F.substring_index("src", "#", 1),
-        mode=mode, compact_every=compact_every,
-        bucket_rows_target=bucket_rows_target, max_buckets=max_buckets,
+        compact_every=compact_every,
     )
     q = (
         edges.writeStream.foreachBatch(cc)

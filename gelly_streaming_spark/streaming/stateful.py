@@ -31,9 +31,7 @@ def lindley_final(carry: int, pdfs: Iterator[pd.DataFrame]) -> int:
     gives the batch-final state directly:
         y_n = max(carry + S_n, S_n - min_k S_k)
             = S_n + max(carry, -min(cumsum))
-    — one vectorized cumsum per key/batch, no per-row Python. Shared
-    by the applyInPandasWithState and transformWithState twins so the
-    two state APIs cannot silently diverge."""
+    — one vectorized cumsum per key/batch, no per-row Python."""
     import numpy as np
 
     deltas = [p["delta"].to_numpy(dtype=np.int64) for p in pdfs]
@@ -126,7 +124,8 @@ def streaming_transitions(
     the batch twin's total-order contract; a bare cast-to-long would
     truncate sub-second ordering into ties (ADVICE r4). A violation
     is a LOUD failure — the state carries the last order value and the
-    fold raises on regression rather than silently miscounting.
+    fold raises on a regression, or on an order value tied within one
+    batch, rather than silently miscounting.
     """
     key_type = dict(df.dtypes)[key]
     order_type = dict(df.dtypes)[order]
@@ -154,6 +153,14 @@ def streaming_transitions(
             yield empty
             return
         pdf = pd.concat(parts).sort_values("__o", kind="mergesort")
+        o = pdf["__o"].to_numpy()
+        ties = o[1:] == o[:-1]
+        if ties.any():
+            raise ValueError(
+                f"out-of-order replay for key {kv!r}: tied order value "
+                f"{int(o[1:][ties][0])} within one batch "
+                "(streaming_transitions requires a strict per-key order)"
+            )
         labels = pdf["__l"].tolist()
         if state.exists:
             last_label, last_ord = state.get
@@ -199,19 +206,23 @@ def streaming_triangle_estimate(
     edges: DataFrame, num_samplers: int = 32, seed: int = 0xDEADBEEF
 ) -> DataFrame:
     """Managed-state streaming twin of the sampled triangle estimate
-    (plans/triangles.estimate_triangles) — the reference's ACTUAL
-    incremental semantics (BroadcastTriangleCount.java:62-174 /
+    (plans/triangles.estimate_triangles), after the reference's
+    incremental samplers (BroadcastTriangleCount.java:62-174 /
     IncidenceSamplingTriangleCount.java:61-242): every edge is routed
     to all S samplers (the reference broadcasts the stream); sampler s
     keeps ONE reservoir edge (replaced at step t with probability
     1/(t+1) — here the deterministic seeded-hash analog
     ``h(s,t) mod (t+1) == 0``, so replays are bit-identical), a third
-    vertex drawn uniformly from the vertices seen so far (index-skip
-    over the insertion-order vertex list, exact-uniform over
-    V_seen \\ {a, b}), and β = 1 once BOTH closing edges arrive after
-    the sample. Estimate = (Σβ/S)·|E|·(|V|−2), via
+    vertex, and β = 1 once BOTH closing edges arrive after the sample.
+    Estimate = (Σβ/S)·|E|·(|V|−2), via
     ``triangle_estimate_from_samplers`` over the latest per-sampler
     rows.
+
+    Deliberate deviation: the reference draws the third vertex from a
+    fixed vertex count V given up front (BroadcastTriangleCount.java:
+    158). V is unknown on an unbounded stream, so here it is drawn
+    uniformly from the vertices SEEN SO FAR (index-skip over the
+    insertion-order vertex list, exact-uniform over V_seen \\ {a, b}).
 
     State per sampler is the seen-vertex list + O(1) scalars — O(S·V)
     total, the reference's own footprint (each Flink sampler instance
