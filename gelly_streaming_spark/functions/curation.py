@@ -16,12 +16,11 @@ Scale notes (designed for 100 TB, tested at sf0.1):
   ONE equi-join on the shingle; the benchmark side is tiny by
   construction (an eval set), and its hot shingles (boilerplate
   n-grams shared by > ``max_bench_df`` benchmark docs) are dropped
-  before the join — the same observable-cap discipline as
-  ``jaccard_pairs``/``minhash_lsh_pairs``, so the join can never
-  degenerate quadratically. This is the standard n-gram
-  decontamination shape (GPT-3 appendix C / PaLM-style 13-gram
-  overlap; the fixture corpus uses word-3-grams so tiny docs still
-  shingle).
+  before the join by the hot-key cap every capped self-join shares
+  (``operators/hotkeys.py``), so the join can never degenerate
+  quadratically. This is the standard n-gram decontamination shape
+  (GPT-3 appendix C / PaLM-style 13-gram overlap; the fixture corpus
+  uses word-3-grams so tiny docs still shingle).
 - split assignment: hash-of-GROUP, not hash-of-doc — near-duplicate
   clusters (``dedup.dedup_groups``) land in ONE split by
   construction, closing the classic train/test leakage hole where two
@@ -45,6 +44,7 @@ from pyspark.sql import functions as F
 from gelly_streaming_spark.functions.dedup import dedup_groups, word_shingles
 from gelly_streaming_spark.functions.hashing import HASH60
 from gelly_streaming_spark.functions.text import TOKENS_EXPR
+from gelly_streaming_spark.operators.hotkeys import drop_hot_keys
 
 # Modulus for hash-threshold sampling: h % MOD is uniform on [0, MOD).
 # MOD * n_stratum must fit BIGINT: 10^6 * 10^12 = 10^18 < 2^63.
@@ -86,24 +86,17 @@ def contamination_overlap(
     output proportional to actual contamination.
 
     Benchmark shingles occurring in more than ``max_bench_df``
-    benchmark docs are dropped before the join (observable via the
-    same df-stats pattern as ``jaccard_df_stats``): a boilerplate
-    n-gram shared by every benchmark doc is noise for contamination
+    benchmark docs are dropped before the join (observable via
+    ``operators.hotkeys.key_counts``, as in ``jaccard_df_stats``): a
+    boilerplate n-gram shared by every benchmark doc is noise for contamination
     AND the only way this join could blow up.
     """
     flagged = benchmark_flagged(docs, bench_mod)
     bench = flagged.filter(F.col("is_bench")).select("doc_id", "text")
     corpus = flagged.filter(~F.col("is_bench")).select("doc_id", "text")
 
-    bs = word_shingles(bench, shingle_n).select(
-        F.col("doc_id").alias("bench_id"), "shingle"
-    )
-    bdf_w = Window.partitionBy("shingle")
-    bs = (
-        bs.withColumn("bdf", F.count(F.lit(1)).over(bdf_w))
-        .filter(F.col("bdf") <= max_bench_df)
-        .drop("bdf")
-    )
+    bs = drop_hot_keys(word_shingles(bench, shingle_n), ["shingle"], max_bench_df)
+    bs = bs.withColumnRenamed("doc_id", "bench_id")
     cs = word_shingles(corpus, shingle_n)  # (doc_id, shingle), distinct
 
     n = cs.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_shingles"))

@@ -15,8 +15,8 @@ Scale notes (the designs are chosen for 100 TB, tested at sf0.1):
   join on a high-cardinality key, never a cross join). Hot buckets
   (boilerplate docs) are the skew risk — AQE skew-join handles the
   join, and the per-bucket pair blow-up is bounded upstream by
-  dropping buckets larger than ``max_bucket`` (standard practice,
-  logged, documented).
+  dropping buckets larger than ``max_bucket`` with the one hot-key
+  cap every capped self-join shares (``operators/hotkeys.py``).
 - SimHash: one aggregate with 2×bits column expressions (JVM-side,
   single shuffle); near-dup candidates via a (max_hamming+1)-band
   equi-join (exact pigeonhole coverage), same no-cross-join property.
@@ -32,11 +32,21 @@ bit-for-bit; doubles appear only as single divisions of exact ints.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from gelly_streaming_spark.functions.hashing import HASH60  # noqa: F401 (canonical)
+from gelly_streaming_spark.functions.similarity import rhp_neardup_pairs
 from gelly_streaming_spark.functions.text import with_tokens
+from gelly_streaming_spark.operators.hotkeys import drop_hot_keys, key_counts
+from gelly_streaming_spark.plans.connected_components import connected_components
+
+
+def doc_tokens(docs: DataFrame) -> DataFrame:
+    """(doc_id, tok): each document's distinct tokens."""
+    return with_tokens(docs).select(
+        "doc_id", F.explode(F.array_distinct("tokens")).alias("tok")
+    )
 
 
 def token_df_stats(docs: DataFrame, max_df: int = 1000) -> DataFrame:
@@ -44,19 +54,7 @@ def token_df_stats(docs: DataFrame, max_df: int = 1000) -> DataFrame:
     (the ``band_occupancy`` pattern: no silent caps). One row per
     distinct token: document frequency, the df² pair volume its join
     bucket would emit, and whether the cap drops it."""
-    toks = with_tokens(docs).select(
-        "doc_id", F.explode(F.array_distinct("tokens")).alias("tok")
-    )
-    return (
-        toks.groupBy("tok")
-        .agg(F.count(F.lit(1)).cast("long").alias("df"))
-        .select(
-            "tok",
-            "df",
-            (F.col("df") * (F.col("df") - 1) / 2).alias("pairs"),
-            (F.col("df") > max_df).alias("dropped"),
-        )
-    )
+    return key_counts(doc_tokens(docs), ["tok"], max_df, "df")
 
 
 def dedup_exact(docs: DataFrame, text_col: str = "text") -> DataFrame:
@@ -103,15 +101,7 @@ def jaccard_pairs(
     ``token_df_stats`` reports per-token df + dropped flags. The
     production path for web-scale near-dup remains MinHash LSH below;
     this stays the exact-Jaccard oracle with a bounded worst case."""
-    toks = with_tokens(docs).select(
-        "doc_id", F.explode(F.array_distinct("tokens")).alias("tok")
-    )
-    df_w = Window.partitionBy("tok")
-    toks = (
-        toks.withColumn("df", F.count(F.lit(1)).over(df_w))
-        .filter(F.col("df") <= max_df)
-        .drop("df")
-    )
+    toks = drop_hot_keys(doc_tokens(docs), ["tok"], max_df)
     # sizes AFTER the prune: jaccard is exact over the surviving
     # vocabulary (both engines, identically)
     sizes = toks.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_toks"))
@@ -202,10 +192,7 @@ def minhash_lsh_pairs(
     per-bucket O(k²) pair blow-up; at 100 TB this is the difference
     between a skewed-but-finite join and an accidental cross join)."""
     bb = minhash_band_buckets(docs, num_hashes, bands, shingle_n)
-    sizes = bb.groupBy("band", "band_hash").agg(F.count(F.lit(1)).alias("bn"))
-    bb = bb.join(
-        sizes.filter(F.col("bn") <= max_bucket), ["band", "band_hash"]
-    ).select("doc_id", "band", "band_hash")
+    bb = drop_hot_keys(bb, ["band", "band_hash"], max_bucket)
     a, b = bb.alias("a"), bb.alias("b")
     return (
         a.join(
@@ -218,6 +205,21 @@ def minhash_lsh_pairs(
             F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b")
         )
         .distinct()
+    )
+
+
+def _survivor_map(
+    rows: DataFrame, pairs: DataFrame, id_col: str, num_shards: int
+) -> DataFrame:
+    """(id_col, keep_id) for EVERY row: keep_id = the min id of the
+    row's connected component in the two-column ``pairs`` graph."""
+    comp = connected_components(
+        pairs.toDF("src", "dst"), num_shards=num_shards, vertex_type="long"
+    ).select(F.col("vertex").alias(id_col), F.col("component").alias("keep"))
+    return (
+        rows.select(id_col)
+        .join(comp, id_col, "left")
+        .select(id_col, F.coalesce("keep", F.col(id_col)).alias("keep_id"))
     )
 
 
@@ -247,24 +249,8 @@ def dedup_groups(
     100 TB the pair graph is far smaller than the corpus (near-dup
     clusters are sparse), so the CC stage is cheap relative to
     signature computation."""
-    from gelly_streaming_spark.plans.connected_components import (
-        connected_components,
-    )
-
     pairs = minhash_lsh_pairs(docs, num_hashes, bands, shingle_n, max_bucket)
-    edges = pairs.select(
-        F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")
-    )
-    comp = connected_components(
-        edges, num_shards=num_shards, vertex_type="long"
-    ).select(F.col("vertex").alias("doc_id"), F.col("component").alias("keep"))
-    return (
-        docs.select("doc_id")
-        .join(comp, "doc_id", "left")
-        .select(
-            "doc_id", F.coalesce("keep", F.col("doc_id")).alias("keep_id")
-        )
-    )
+    return _survivor_map(docs, pairs, "doc_id", num_shards)
 
 
 def embedding_dedup_groups(
@@ -293,29 +279,10 @@ def embedding_dedup_groups(
     the dominant cost and embarrassingly parallel, the pair graph is
     sparse relative to the corpus, and the CC stage is the
     distributed pointer-doubling resolver (no O(V) funnel)."""
-    from gelly_streaming_spark.functions.similarity import (
-        rhp_neardup_pairs,
-    )
-    from gelly_streaming_spark.plans.connected_components import (
-        connected_components,
-    )
-
     pairs = rhp_neardup_pairs(
         embeddings, threshold, planes, bands, max_bucket
     )
-    edges = pairs.select(
-        F.col("id_a").alias("src"), F.col("id_b").alias("dst")
-    )
-    comp = connected_components(
-        edges, num_shards=num_shards, vertex_type="long"
-    ).select(F.col("vertex").alias("vec_id"), F.col("component").alias("keep"))
-    return (
-        embeddings.select("vec_id")
-        .join(comp, "vec_id", "left")
-        .select(
-            "vec_id", F.coalesce("keep", F.col("vec_id")).alias("keep_id")
-        )
-    )
+    return _survivor_map(embeddings, pairs, "vec_id", num_shards)
 
 
 def simhash(docs: DataFrame, bits: int = 60) -> DataFrame:

@@ -36,6 +36,8 @@ import math
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from gelly_streaming_spark.operators.hotkeys import drop_hot_keys
+
 
 def rhp_params_for(
     n_vectors: int, bands: int = 4, target_bucket: int = 256
@@ -324,10 +326,7 @@ def rhp_neardup_pairs(
     ``dedup.embedding_neardup_pairs`` but never materializes O(n²)
     pairs; recall is governed by (planes, bands)."""
     bb = rhp_bands(embeddings, planes, bands)
-    sizes = bb.groupBy("band", "band_sig").agg(F.count(F.lit(1)).alias("bn"))
-    bb = bb.join(sizes.filter(F.col("bn") <= max_bucket), ["band", "band_sig"]).select(
-        "vec_id", "band", "band_sig"
-    )
+    bb = drop_hot_keys(bb, ["band", "band_sig"], max_bucket)
     a, b = bb.alias("a"), bb.alias("b")
     cand = (
         a.join(

@@ -29,6 +29,7 @@ from gelly_streaming_spark.functions import dedup as dd
 from gelly_streaming_spark.functions import multimodal as mm
 from gelly_streaming_spark.functions import similarity as sim
 from gelly_streaming_spark.functions import text as tx
+from gelly_streaming_spark.operators import hotkeys as hk
 from gelly_streaming_spark.plans import triangles as tri
 from gelly_streaming_spark.plans.bipartiteness import BipartitenessCheck
 from gelly_streaming_spark.plans.connected_components import ConnectedComponents
@@ -117,6 +118,15 @@ SQL_TOKS = (
 COOC_MAX_BUCKET = 1000
 
 
+def _user_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(user_id, event_type, wb): distinct users per 1-hour bucket."""
+    _utc(spark)
+    ev = _t(spark, sf_dir, "events")
+    return ev.select(
+        "user_id", "event_type", F.window("ts", "1 hour")["start"].alias("wb")
+    ).distinct()
+
+
 def cooccurrence_edges(
     spark: SparkSession, sf_dir: str, max_bucket: int = COOC_MAX_BUCKET
 ) -> DataFrame:
@@ -134,8 +144,6 @@ def cooccurrence_edges(
     bucket = 10 users, sf0.1 max = 51). Dropped buckets are
     observable, not silent: ``cooccurrence_bucket_stats`` reports
     per-bucket sizes and the dropped set."""
-    _utc(spark)
-    ev = _t(spark, sf_dir, "events")
     # Plan-shape note (r4, measured): a join-free formulation — one
     # groupBy(collect_set) + JVM-side pair explosion, 2 exchanges vs
     # this self-join's 4 — is ~1.5 s faster STANDALONE at sf0.1, but
@@ -149,15 +157,8 @@ def cooccurrence_edges(
     # (verified via explain: SortMergeJoin under this formulation,
     # BroadcastExchange under the explode one). The self-join's
     # honest stats are worth more than the two saved exchanges.
-    ue = ev.select(
-        "user_id", "event_type", F.window("ts", "1 hour")["start"].alias("wb")
-    ).distinct()
-    bucket_w = Window.partitionBy("event_type", "wb")
-    ue = (
-        ue.withColumn("bucket_n", F.count(F.lit(1)).over(bucket_w))
-        .filter(F.col("bucket_n") <= max_bucket)
-        .drop("bucket_n")
-    )
+    ue = _user_buckets(spark, sf_dir)
+    ue = hk.drop_hot_keys(ue, ["event_type", "wb"], max_bucket)
     a, b = ue.alias("a"), ue.alias("b")
     return (
         a.join(
@@ -197,25 +198,8 @@ def cooccurrence_bucket_stats(
     ``band_occupancy`` pattern: no silent caps). One row per
     (event_type, hour bucket): distinct-user count, the k² pair
     volume it would emit, and whether the cap drops it."""
-    _utc(spark)
-    ev = _t(spark, sf_dir, "events")
-    return (
-        ev.select(
-            "user_id",
-            "event_type",
-            F.window("ts", "1 hour")["start"].alias("wb"),
-        )
-        .distinct()
-        .groupBy("event_type", "wb")
-        .agg(F.count(F.lit(1)).alias("users"))
-        .select(
-            "event_type",
-            "wb",
-            "users",
-            (F.col("users") * (F.col("users") - 1) / 2).alias("pairs"),
-            (F.col("users") > max_bucket).alias("dropped"),
-        )
-    )
+    ue = _user_buckets(spark, sf_dir)
+    return hk.key_counts(ue, ["event_type", "wb"], max_bucket, "users")
 
 
 SQL_COOC_BUCKET_STATS = f"""WITH ue0 AS (
@@ -225,7 +209,7 @@ SQL_COOC_BUCKET_STATS = f"""WITH ue0 AS (
 ),
 g AS (SELECT event_type, wb, count(*)::BIGINT AS users
       FROM ue0 GROUP BY 1, 2)
-SELECT event_type, wb, users, users * (users - 1) / 2 AS pairs,
+SELECT event_type, wb, users, {hk.SQL_PAIR_VOLUME.format(n="users")} AS pairs,
        users > {COOC_MAX_BUCKET} AS dropped
 FROM g"""
 
@@ -1212,7 +1196,7 @@ def q_jaccard_df_stats(spark, sf_dir):
 SQL_JACCARD_DF_STATS = f"""WITH {SQL_TOKS},
 x AS (SELECT doc_id, unnest(list_distinct(tokens)) AS tok FROM toks),
 d AS (SELECT tok, count(*)::BIGINT AS df FROM x GROUP BY tok)
-SELECT tok, df, df * (df - 1) / 2 AS pairs,
+SELECT tok, df, {hk.SQL_PAIR_VOLUME.format(n="df")} AS pairs,
        df > {JACCARD_MAX_DF} AS dropped
 FROM d"""
 
@@ -1229,10 +1213,9 @@ def q_vocab_topk(spark, sf_dir):
     partition. The fixture corpus is word-soup over ~31 tokens, so
     k=100 returns the whole vocabulary — the ORDER itself (count-desc
     with the tie rule) is what the oracle hash pins."""
-    toks = tx.with_tokens(_tp(spark, sf_dir, "documents")).select(
-        "doc_id", F.explode(F.array_distinct("tokens")).alias("tok")
+    d = dd.doc_tokens(_tp(spark, sf_dir, "documents")).groupBy("tok").agg(
+        F.count(F.lit(1)).alias("df")
     )
-    d = toks.groupBy("tok").agg(F.count(F.lit(1)).cast("long").alias("df"))
     top = d.orderBy(F.col("df").desc(), F.col("tok")).limit(VOCAB_TOPK)
     return top.withColumn(
         "rank",
@@ -1282,20 +1265,22 @@ def q_minhash_lsh_pairs(spark, sf_dir):
 # scale, not just where nothing is dropped (VERDICT r4's reading)
 MINHASH_MAX_BUCKET = 1000
 
-# banded buckets + the bucket-size cap, shared by the pair query and
-# the dedup_groups closure
-SQL_MINHASH_BUCKETS_CTE = f"""bands AS (SELECT doc_id, j // 4 AS band,
+# banded buckets + the bucket-size cap + the pairs, shared by the pair
+# query and the dedup_groups closure
+SQL_MINHASH_PAIRS_CTES = f"""bands AS (SELECT doc_id, j // 4 AS band,
                  md5(string_agg(minhash::VARCHAR, ',' ORDER BY j)) AS band_hash
           FROM hx GROUP BY doc_id, j // 4),
 bb AS (SELECT doc_id, band, band_hash FROM bands
        QUALIFY count(*) OVER (PARTITION BY band, band_hash)
-               <= {MINHASH_MAX_BUCKET})"""
+               <= {MINHASH_MAX_BUCKET}),
+prs AS MATERIALIZED (SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
+       FROM bb a JOIN bb b
+         ON a.band = b.band AND a.band_hash = b.band_hash
+        AND a.doc_id < b.doc_id)"""
 
 SQL_MINHASH_LSH_PAIRS = f"""WITH {SQL_MINHASH_SIG_CTE},
-{SQL_MINHASH_BUCKETS_CTE}
-SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-FROM bb a JOIN bb b
-  ON a.band = b.band AND a.band_hash = b.band_hash AND a.doc_id < b.doc_id"""
+{SQL_MINHASH_PAIRS_CTES}
+SELECT doc_a, doc_b FROM prs"""
 
 
 def q_dedup_groups(spark, sf_dir):
@@ -1304,24 +1289,26 @@ def q_dedup_groups(spark, sf_dir):
     return dd.dedup_groups(_tp(spark, sf_dir, "documents"))
 
 
-# CTE chain shared by dedup_groups and the dedup-aware split queries
-# (grp = the survivor map, one row per document)
-SQL_DEDUP_GROUPS_CTES = f"""{SQL_MINHASH_SIG_CTE},
-{SQL_MINHASH_BUCKETS_CTE},
-prs AS MATERIALIZED (SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-       FROM bb a JOIN bb b
-         ON a.band = b.band AND a.band_hash = b.band_hash
-        AND a.doc_id < b.doc_id),
-sym AS MATERIALIZED (SELECT doc_a AS a, doc_b AS b FROM prs
-       UNION SELECT doc_b, doc_a FROM prs),
+def _sql_survivor_map(pairs: str, a: str, b: str, table: str, id_col: str) -> str:
+    """CTE chain (needs WITH RECURSIVE) twin of ``dd._survivor_map``:
+    ``grp`` = (id_col, keep_id) over ``table`` from the (a, b) ``pairs``."""
+    return f"""sym AS MATERIALIZED (SELECT {a} AS a, {b} AS b FROM {pairs}
+       UNION SELECT {b}, {a} FROM {pairs}),
 walk(v, comp) AS (
   SELECT a, a FROM (SELECT DISTINCT a FROM sym)
   UNION
   SELECT s.b, w.comp FROM walk w JOIN sym s ON s.a = w.v
 ),
-cc AS (SELECT v AS doc_id, min(comp) AS keep FROM walk GROUP BY v),
-grp AS (SELECT d.doc_id, coalesce(cc.keep, d.doc_id) AS keep_id
-        FROM documents d LEFT JOIN cc USING (doc_id))"""
+cc AS (SELECT v AS {id_col}, min(comp) AS keep FROM walk GROUP BY v),
+grp AS (SELECT d.{id_col}, coalesce(cc.keep, d.{id_col}) AS keep_id
+        FROM {table} d LEFT JOIN cc USING ({id_col}))"""
+
+
+# CTE chain shared by dedup_groups and the dedup-aware split queries
+# (grp = the survivor map, one row per document)
+SQL_DEDUP_GROUPS_CTES = f"""{SQL_MINHASH_SIG_CTE},
+{SQL_MINHASH_PAIRS_CTES},
+{_sql_survivor_map("prs", "doc_a", "doc_b", "documents", "doc_id")}"""
 
 SQL_DEDUP_GROUPS = f"""WITH RECURSIVE {SQL_DEDUP_GROUPS_CTES}
 SELECT doc_id, keep_id FROM grp"""
@@ -1352,7 +1339,7 @@ def q_contamination(spark, sf_dir):
 # benchmark slice = deterministic 1/20 of docs by id hash; shingles
 # reuse the minhash `sh` CTE (word-3-grams) so the two ops can never
 # drift apart. Bench-side hot shingles capped via QUALIFY, mirroring
-# the Window cap in curation.contamination_overlap.
+# the drop_hot_keys cap in curation.contamination_overlap.
 SQL_CONTAMINATION = f"""WITH {SQL_MINHASH_SIG_CTE},
 flag AS (SELECT doc_id, ({_DUCK_ID_H} % {CONTAM_BENCH_MOD} = 0) AS is_bench
          FROM documents),
@@ -1724,16 +1711,8 @@ def q_embedding_dedup_groups(spark, sf_dir):
 
 SQL_EMBEDDING_DEDUP_GROUPS = f"""WITH RECURSIVE {_sql_rhp_sig_cte(32)},
 {_SQL_RHP_PAIRS_CTES},
-esym AS MATERIALIZED (SELECT id_a AS a, id_b AS b FROM eprs
-       UNION SELECT id_b, id_a FROM eprs),
-ewalk(v, comp) AS (
-  SELECT a, a FROM (SELECT DISTINCT a FROM esym)
-  UNION
-  SELECT s.b, w.comp FROM ewalk w JOIN esym s ON s.a = w.v
-),
-ecc AS (SELECT v AS vec_id, min(comp) AS keep FROM ewalk GROUP BY v)
-SELECT e.vec_id, coalesce(ecc.keep, e.vec_id) AS keep_id
-FROM embeddings e LEFT JOIN ecc USING (vec_id)"""
+{_sql_survivor_map("eprs", "id_a", "id_b", "embeddings", "vec_id")}
+SELECT vec_id, keep_id FROM grp"""
 
 
 # ---------------------------------------------------------------------------

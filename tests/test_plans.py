@@ -162,7 +162,7 @@ def test_iterative_plans_stay_jvm_side(spark):
 
 
 def test_cooccurrence_cap_prefilters_the_join(spark):
-    """The bucket cap must sit BELOW the self-join (a window + filter
+    """The bucket cap must sit BELOW the self-join (a count joined back
     on the build side), not above it — otherwise the k^2 fan-out
     happens before the guard. (The join formulation is deliberate:
     see the r4 note in cooccurrence_edges — a join-free explode
@@ -174,9 +174,30 @@ def test_cooccurrence_cap_prefilters_the_join(spark):
     opt = optimized_of(df)
     join_pos = opt.find("Join")
     assert join_pos >= 0
-    # the windowed count filter appears in the join's subtree (after
+    # the cap's kept-key join appears in the join's subtree (after
     # the first Join line in the tree print = inside its children)
-    assert "bucket_n" in opt[join_pos:], opt[:500]
+    assert "_hk_" not in opt[join_pos:].splitlines()[0], opt[:500]
+    assert "_hk_" in opt[join_pos:], opt[:500]
+
+
+def test_hot_key_caps_have_no_window(spark):
+    """The hot-key caps are a groupBy count joined back on the kept
+    keys, never a Window partitioned by the cap key: a hot token,
+    shingle or event bucket would be one window partition that
+    cannot be split."""
+    from gelly_streaming_spark.functions.curation import contamination_overlap
+    from gelly_streaming_spark.functions.dedup import jaccard_pairs
+    from gelly_streaming_spark.queries import _t, cooccurrence_edges
+
+    docs = _t(spark, SF, "documents")
+    for name, df in (
+        ("jaccard_pairs", jaccard_pairs(docs, threshold=0.9)),
+        ("contamination_overlap", contamination_overlap(docs)),
+        ("cooccurrence_edges", cooccurrence_edges(spark, SF)),
+    ):
+        opt = optimized_of(df)
+        assert "Window [" not in opt, (name, opt[:1500])
+        assert "_hk_" in opt, (name, opt[:1500])
 
 
 def test_repetition_and_pii_zero_shuffle(spark):

@@ -644,6 +644,50 @@ def test_rhp_neardup_recall_vs_bruteforce(spark):
     assert len(approx & planted) >= 4  # high recall on near-identical vecs
 
 
+@pytest.mark.parametrize("op", ["minhash_lsh_pairs", "rhp_neardup_pairs"])
+@pytest.mark.parametrize("max_bucket,n_pairs", [(4, 0), (5, 10)])
+def test_lsh_bucket_cap_fires(spark, op, max_bucket, n_pairs):
+    """5 identical rows put 5 rows in every band bucket: a cap of 4
+    drops every bucket (no pairs), a cap of 5 keeps them all (the
+    C(5, 2) = 10 pairs)."""
+    if op == "minhash_lsh_pairs":
+        rows = spark.createDataFrame(
+            [(i, "the same five words here") for i in range(5)],
+            schema="doc_id long, text string",
+        )
+        pairs = dd.minhash_lsh_pairs(rows, max_bucket=max_bucket)
+    else:
+        rows = spark.createDataFrame(
+            [(i, [1.0, -2.0, 3.0, 0.5]) for i in range(5)],
+            schema="vec_id long, embedding array<double>",
+        )
+        pairs = sim.rhp_neardup_pairs(rows, max_bucket=max_bucket)
+    assert pairs.count() == n_pairs
+
+
+def test_pair_volume_no_bigint_wrap(spark):
+    """The drop reports' pair volume n(n-1)/2 at n = 4e9: a BIGINT
+    product overflows (DuckDB raises; Spark raises under ANSI, wraps
+    without it); both engines must give the same positive double."""
+    import duckdb
+
+    from gelly_streaming_spark.operators.hotkeys import SQL_PAIR_VOLUME, pair_volume
+    from gelly_streaming_spark.queries import (
+        SQL_COOC_BUCKET_STATS,
+        SQL_JACCARD_DF_STATS,
+    )
+
+    n = 4_000_000_000
+    got = spark.range(1).select(pair_volume(F.lit(n)).alias("p")).first()["p"]
+    want = duckdb.sql(
+        f"SELECT {SQL_PAIR_VOLUME.format(n=f'CAST({n} AS BIGINT)')}"
+    ).fetchone()[0]
+    assert got == want == float(n) * (n - 1) / 2 > 0
+    # the oracle twins of both drop reports use this expression
+    assert SQL_PAIR_VOLUME.format(n="df") in SQL_JACCARD_DF_STATS
+    assert SQL_PAIR_VOLUME.format(n="users") in SQL_COOC_BUCKET_STATS
+
+
 def test_cooccurrence_bucket_stats_and_cap(spark):
     """The cap's observability helper must agree with a direct count,
     flag exactly the over-cap buckets, and the capped edge set must
